@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool for the optimization rounds: writes
   * `.explain("formatted")` output for the named queries (or all of
   * them) to `<outDir>/<query>_<suffix>.txt`. Run manually, never by
@@ -31,17 +29,7 @@ object ExplainDump {
     val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftRuntime.silenceKnownBenignWarnings()
+    val spark = GraftRuntime.localSession(cpus, logLevel = "ERROR")
     Files.createDirectories(outDir)
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
         if only.isEmpty || only(name)) {

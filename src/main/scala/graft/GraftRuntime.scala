@@ -2,9 +2,31 @@ package graft
 
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.sql.SparkSession
 
-/** Log hygiene for the drive surfaces (Bench/Verify). */
+/** Log hygiene for the drive surfaces (Bench/Verify), and the local
+  * session the dev mains (OptProbe, ExplainDump, ScaleCurve) share.
+  */
 object GraftRuntime {
+
+  /** A `local[cpus]` session with the suite's settings: shuffle width =
+    * cores, AQE on (also inside cached subtrees), UTC, no UI; the
+    * known-benign warnings are silenced.
+    */
+  def localSession(cpus: String, logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    silenceKnownBenignWarnings()
+    spark
+  }
 
   /** Drops the `WindowExec: No Partition Defined for Window operation!`
     * warning. The only unpartitioned windows in this codebase are the

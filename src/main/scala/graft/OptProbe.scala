@@ -3,7 +3,6 @@ package graft
 import java.util.Locale
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Job/stage/task profiler for the optimization rounds: runs the named
   * queries (cold + N warm reps) under a SparkListener and prints, per
@@ -79,17 +78,7 @@ object OptProbe {
     val names = args.drop(1).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftRuntime.silenceKnownBenignWarnings()
+    val spark = GraftRuntime.localSession(cpus)
     val counter = new Counter
     spark.sparkContext.addSparkListener(counter)
     Tables(spark, sfDir, "lineitem").count() // warmup

@@ -1,36 +1,41 @@
 package graft
 
-/** Per-JVM memo of fixture-pure staging directories (the CdcApply
-  * "stagedDirs" convention, factored out): `key` names the staging as
-  * a pure function of the fixture — include every parameter that
-  * changes the staged bytes — and `build` populates a fresh temp dir
-  * exactly once per JVM; the dir lives until JVM exit (shutdown-hook
-  * delete). Production pipelines pay layout/staging cost once, not
-  * per query run; re-deriving it per bench rep both billed that cost
-  * to every rep and churned enough temp I/O and cleaner backlog to
-  * spike NEIGHBORING queries' worst-rep times (the r14 driver's mig
-  * first-rep signature: med ~1 s, max ~13 s on pure-compute queries
-  * sharing the family with per-rep staging writers).
+/** Per-JVM memo of fixture-pure work — staging directories (`dir`)
+  * and small derived values (`value`): `key` names the work as a pure
+  * function of the fixture — include every parameter that changes the
+  * result — and the build runs once per JVM; a staged dir lives until
+  * JVM exit (shutdown-hook delete). Production pipelines pay
+  * layout/staging cost once, not per query run; re-deriving it per
+  * bench rep both billed that cost to every rep and churned enough
+  * temp I/O and cleaner backlog to spike NEIGHBORING queries'
+  * worst-rep times (the r14 bench's mig first-rep signature: med
+  * ~1 s, max ~13 s on pure-compute queries sharing the family with
+  * per-rep staging writers).
   *
-  * Concurrent first callers may both run `build` into private temp
-  * dirs (TrieMap.getOrElseUpdate evaluates `mk` outside the map lock
-  * for distinct keys only, but same-key races are serialized by
-  * getOrElseUpdate's CAS — the losing dir is orphaned until the
-  * shutdown hook); staging must therefore be idempotent, which pure
-  * fixture functions are by definition.
+  * Concurrent first callers of one key may both run the build
+  * (TrieMap.getOrElseUpdate evaluates it outside any lock; the first
+  * insert wins and a losing dir is orphaned until the shutdown hook),
+  * so a build must be idempotent, which pure fixture functions are by
+  * definition. Builds may nest (a staging that needs a memoized value).
   */
 object StagedFixture {
-  private val dirs = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val memo = scala.collection.concurrent.TrieMap.empty[String, Any]
+
+  /** The value memoized under `key`, computed on first use. Keys share
+    * one namespace with [[dir]]'s, so each tag names one kind of value.
+    */
+  def value[T](key: String)(build: => T): T =
+    memo.getOrElseUpdate(key, build).asInstanceOf[T]
 
   /** The staged directory for `key`, building it on first use. */
   def dir(key: String, prefix: String)(build: String => Unit): String =
-    dirs.getOrElseUpdate(key, {
+    value(key) {
       val st = java.nio.file.Files.createTempDirectory(prefix)
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         org.apache.commons.io.FileUtils.deleteQuietly(st.toFile): Unit))
       build(st.toString)
       st.toString
-    })
+    }
 
   /** Memo key for a staging that is a pure function of fixture `dir`:
     * `tag:dir@digest`, where the digest covers every regular file's

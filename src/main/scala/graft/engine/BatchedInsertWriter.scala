@@ -21,11 +21,16 @@ trait BatchSink extends Serializable {
   * until `RESERVED_BYTES + bytes(next) would exceed maxPacketBytes`,
   * flush as one statement/transaction, repeat; final partial flush.
   *
-  * Byte accounting matches the reference exactly: the prefix counts
-  * once per batch, tuples are comma-joined (+1 byte per comma), and 10
-  * reserved slack bytes are held back (table_migrator.rs:19). Lengths
-  * are UTF-8 byte lengths, not char counts, to honor MySQL's
-  * max_allowed_packet (SURVEY.md §7.4).
+  * Byte accounting follows the reference: the prefix counts once per
+  * batch, tuples are comma-joined (+1 byte per comma), and 10 reserved
+  * slack bytes are held back (table_migrator.rs:19). Lengths are UTF-8
+  * byte lengths, not char counts, to honor MySQL's max_allowed_packet
+  * (SURVEY.md §7.4). One deliberate departure: the reference tests the
+  * bound before counting the joining comma, so a full batch could end
+  * one byte into the reserve; here the comma counts before the test,
+  * so every multi-tuple statement keeps bytes + ReservedBytes <=
+  * maxPacketBytes (batches can hold one tuple fewer than the
+  * reference's at the exact edge).
   *
   * Scale: the loop is per-partition sequential (as any JDBC writer
   * is); throughput scales with partition count, and each partition
@@ -67,7 +72,9 @@ object BatchedInsertWriter {
           val tuple = SqlLiteral.valueTuple(row.toSeq, quotedDecimals)
           val tupleBytes = tuple.getBytes("UTF-8").length
 
-          if (ReservedBytes + totalBytes + tupleBytes > maxPacketBytes)
+          val commaBytes = if (batchRows > 0) 1 else 0
+          if (ReservedBytes + totalBytes + commaBytes + tupleBytes >
+              maxPacketBytes)
             flush()
           // A single tuple larger than the packet bound still ships as
           // its own batch (flush above was a no-op at batchRows == 0) —

@@ -425,7 +425,10 @@ final class JdbcTargetWriter(
   }
 
   /** inserter.rs:88-111: BEGIN; FK off; statements; FK on; COMMIT —
-    * rollback and rethrow on any failure.
+    * rollback and rethrow on any failure. Auto-commit is restored on
+    * both paths, but after a failure the target may already have
+    * closed the connection, so a failed restore is attached to the
+    * statement's error as suppressed instead of replacing it.
     */
   private def transactional(statements: Seq[String]): Unit = withConn { c =>
     c.setAutoCommit(false)
@@ -437,10 +440,13 @@ final class JdbcTargetWriter(
     } catch {
       case e: Throwable =>
         try c.rollback() catch { case _: Throwable => () }
-        throw new RuntimeException(
+        val err = new RuntimeException(
           s"Cannot execute transaction query: ${statements.headOption
             .map(_.take(100)).getOrElse("EMPTY QUERY")}. Error: ${e.getMessage}", e)
-    } finally c.setAutoCommit(true)
+        try c.setAutoCommit(true) catch { case r: Throwable => err.addSuppressed(r) }
+        throw err
+    }
+    c.setAutoCommit(true)
   }
 
   override def maxAllowedPacket: Long = flavor.maxPacketSql match {

@@ -1288,7 +1288,7 @@ object Dedup {
     * too.
     */
   /** Hamming pair set staged to parquet once per (JVM, fixture) — the
-    * CdcApply.stagedDirs convention — consumed by dd_simhash_hamming's
+    * graft.StagedFixture convention — consumed by dd_simhash_hamming's
     * surface and the cluster labeling below. The pair set is a pure
     * function of the fixture; the former in-memory `.cache()` could be
     * evicted mid-suite, turning a worst-case rep into a full recompute
@@ -1816,7 +1816,7 @@ object Dedup {
     * generated from one loop so the unroll depth cannot drift.
     */
   private def ingestMultibatch(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.IncrementalIngest.ingestMany(s, dir,
+    graft.streaming.IncrementalIngest.ingest(s, dir,
       threshold = 0.5, shingleK = ShingleK, maxShingleDf = MaxShingleDf,
       nBatches = 4, compactEvery = 4)
 

@@ -55,17 +55,6 @@ object CdcApply {
     StructField("price", DoubleType), StructField("version", LongType),
     StructField("op", StringType), StructField("kb", IntegerType)))
 
-  /** Deterministic per-(fixture, buckets) staging of the five change-
-    * log version snapshots, built once per JVM (the IncrementalIngest
-    * stagedDirs convention): the snapshots are pure functions of the
-    * fixture, and re-deriving five full source scans per invocation
-    * billed repeated bench reps for work a real CDC source never
-    * repeats. The mutable per-run state (arrivals, state dir) stays
-    * fresh per invocation.
-    */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-
   def apply(spark: SparkSession, dir: String,
       buckets: Int = 16): DataFrame = {
     require(buckets >= 1, s"cdc apply: buckets must be >= 1, got $buckets")
@@ -81,43 +70,32 @@ object CdcApply {
           col("o_totalprice").as("price"),
           lit(v).as("version"), lit(op).as("op"),
           pmod(col("o_orderkey"), lit(buckets)).cast("int").as("kb"))
-    val staged = java.nio.file.Paths.get(
-      stagedDirs.getOrElseUpdate((dir, buckets), {
-        val st = Files.createTempDirectory("graft_cdc_staged")
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          org.apache.commons.io.FileUtils.deleteQuietly(st.toFile): Unit))
-        val versions = Seq(
-          snap(1L, "U"),
-          snap(2L, "U").filter(col("k") % 10 === 0)
-            .withColumn("price", col("price") + 1000.0),
-          snap(3L, "D").filter(col("k") % 17 === 0),
-          snap(4L, "U").filter(col("k") % 34 === 0)
-            .withColumn("price", lit(42.0)),
-          snap(5L, "U").filter(col("k") % 20 === 0)
-            .withColumn("price", col("price") + 5000.0))
-        versions.zipWithIndex.foreach { case (v, i) =>
-          v.coalesce(1).write.mode("overwrite")
-            .parquet(st.resolve(s"v${i + 1}").toString)
-        }
-        st.toString
-      }))
+    // the five version snapshots are pure functions of the fixture,
+    // staged once per JVM (graft.StagedFixture): re-deriving five full
+    // source scans per invocation billed repeated bench reps for work
+    // a real CDC source never repeats. The mutable per-run state
+    // (arrivals, state dir) stays fresh per invocation.
+    val staged = java.nio.file.Paths.get(graft.StagedFixture.dir(
+        graft.StagedFixture.key(s"cdc_versions_b$buckets", dir),
+        "graft_cdc_staged") { st =>
+      val versions = Seq(
+        snap(1L, "U"),
+        snap(2L, "U").filter(col("k") % 10 === 0)
+          .withColumn("price", col("price") + 1000.0),
+        snap(3L, "D").filter(col("k") % 17 === 0),
+        snap(4L, "U").filter(col("k") % 34 === 0)
+          .withColumn("price", lit(42.0)),
+        snap(5L, "U").filter(col("k") % 20 === 0)
+          .withColumn("price", col("price") + 5000.0))
+      versions.zipWithIndex.foreach { case (v, i) =>
+        v.coalesce(1).write.mode("overwrite").parquet(s"$st/v${i + 1}")
+      }
+    })
 
     val work = Files.createTempDirectory("graft_cdc_apply")
     val arrivals = work.resolve("arrivals")
     Files.createDirectories(arrivals)
     val stateDir = work.resolve("state").toString
-
-    def arrive(name: String): Unit = {
-      val listing = Files.list(staged.resolve(name))
-      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .forEach { f =>
-          val tmp = arrivals.resolve(s"${name}_${f.getFileName}.tmp")
-          Files.copy(f, tmp)
-          Files.move(tmp, arrivals.resolve(s"${name}_${f.getFileName}"),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      finally listing.close()
-    }
 
     val q = ss.readStream
       .schema(stateSchema)
@@ -169,7 +147,8 @@ object CdcApply {
       // specs (StreamRecoverySpec restart + bucket invariance) pin the
       // multi-batch behavior independently.
       Seq(Seq(1, 2, 3), Seq(4, 5)).foreach { wave =>
-        wave.foreach(i => arrive(s"v$i"))
+        wave.foreach(i =>
+          Arrivals.copyIn(staged.resolve(s"v$i"), arrivals, s"v$i"))
         q.processAllAvailable()
       }
     } finally q.stop()

@@ -39,9 +39,6 @@ object EventStream {
     * Sentinel/probe batches are staged in the SAME vintage as the
     * fixture they share a stream with (one source, one schema).
     */
-  private val vintageMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
   private def eventsTsIsLegacyNanos(ss: SparkSession, dir: String): Boolean = {
     if (!ss.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
         .contains("true"))
@@ -49,9 +46,10 @@ object EventStream {
     // the observed footer type is a pure fixture function — memoize it
     // (content-stamped key) so the 21 evs queries stop re-reading the
     // footer per invocation; the conf set above stays per-session
-    vintageMemo.getOrElseUpdate(graft.StagedFixture.key("events_ts", dir),
+    graft.StagedFixture.value(graft.StagedFixture.key("events_ts", dir)) {
       ss.read.parquet(s"$dir/events.parquet").schema("ts").dataType ==
-        LongType)
+        LongType
+    }
   }
 
   private def rawSchema(legacyNanos: Boolean) = StructType(Seq(
@@ -191,24 +189,16 @@ object EventStream {
   }
 
   /** max event time per fixture — a pure fixture function scanned
-    * once per JVM, not once per invocation (the srcNames/StagedFixture
-    * memo convention; lateDataDrop and the sentinel staging both need
-    * it to place probe/sentinel rows relative to the watermark).
+    * once per JVM, not once per invocation (lateDataDrop and the
+    * sentinel staging both need it to place probe/sentinel rows
+    * relative to the watermark). The content-stamped key gives a
+    * fixture regenerated mid-JVM a fresh scan, never a stale constant.
     */
-  private val maxTsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  /** windowedTopK's validated (event_type, packed-long) dim — a pure
-    * fixture function memoized like maxTsMemo (content-stamped key).
-    */
-  private val wtopkDimMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(String, Long)]]
   private def maxEventMicros(ss: SparkSession, dir: String): Long =
-    // content-stamped key (the StagedFixture convention): a fixture
-    // regenerated mid-JVM gets a fresh scan, never a stale constant
-    maxTsMemo.getOrElseUpdate(graft.StagedFixture.key("max_ts", dir),
+    graft.StagedFixture.value(graft.StagedFixture.key("max_ts", dir)) {
       graft.Tables(ss, dir, "events")
-        .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0))
+        .agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+    }
 
   /** Run a streaming aggregation to completion into a memory sink and
     * return the sink table (registered in the stream's own session).
@@ -435,36 +425,28 @@ object EventStream {
     * end-of-stream flush for append-mode operators; consumers filter
     * `user_id >= 0` from their output.
     */
-  /** Staged sentinel dirs are reused per (fixture dir, sentinel set) —
-    * repeated invocations in one JVM (bench, verify, tests) stage the
-    * events copy once — and deleted on JVM exit.
-    */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, Seq[String]), String]
-
   private def sentinelFlushedEvents(ss: SparkSession, dir: String,
       sentinelTypes: Seq[String]): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val legacy = eventsTsIsLegacyNanos(ss, dir)
-    val staged = stagedDirs.getOrElseUpdate((dir, sentinelTypes), {
-      val streamDir = Files.createTempDirectory("graft_sentinel_stream")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(streamDir.toFile): Unit))
+    // staged once per (fixture, sentinel set) and JVM — repeated
+    // invocations (bench, verify, tests) copy the events once
+    val staged = graft.StagedFixture.dir(graft.StagedFixture.key(
+        s"sentinel_${sentinelTypes.mkString(",")}", dir),
+        "graft_sentinel_stream") { st =>
+      val streamDir = java.nio.file.Paths.get(st)
       copyEventsInto(dir, streamDir)
       val maxTsMicros = maxEventMicros(ss, dir)
       stageEventRows(ss, legacy,
         sentinelTypes.zipWithIndex.map { case (t, i) =>
           (-1L - i, maxTsMicros + 30L * 24 * 3600 * 1000000L, -1L, t, 0.0, "{}")
         }, streamDir.resolve("sentinel").toString)
-      streamDir.toString
-    })
+    }
 
-    val streamDir = java.nio.file.Paths.get(staged)
     ss.readStream
       .schema(rawSchema(legacy))
       .option("pathGlobFilter", "*.parquet")
       .option("recursiveFileLookup", "true")
-      .parquet(streamDir.toString)
+      .parquet(staged)
       .withColumn("ts", normalizedTs(legacy))
   }
 
@@ -602,11 +584,11 @@ object EventStream {
     val sunk = runToCompletion(ss, top, "evs_wtopk_sink", "append")
     // the (event_type, packed) dim is a pure fixture function (type
     // cardinality, not data size) — collect and validate it once per
-    // (JVM, fixture), the maxTsMemo convention; each invocation then
+    // (JVM, fixture) through graft.StagedFixture; each invocation then
     // rebuilds the broadcast side as a driver-local relation with no
     // distinct/collect jobs
-    val dimPairs = wtopkDimMemo.getOrElseUpdate(
-      graft.StagedFixture.key("wtopk_dim", dir), {
+    val dimPairs: Array[(String, Long)] = graft.StagedFixture.value(
+        graft.StagedFixture.key("wtopk_dim", dir)) {
         val rows = graft.Tables(ss, dir, "events")
           .select(col("event_type")).distinct()
           .select(col("event_type"), packedType(col("event_type")).as("pt"))
@@ -626,7 +608,7 @@ object EventStream {
               "the long pack cannot represent it")
         }
         rows
-      })
+      }
     import ss.implicits._
     val dim = dimPairs.toSeq.toDF("event_type", "pt").coalesce(1)
     sunk.select(col("w2.start").as("hour"),

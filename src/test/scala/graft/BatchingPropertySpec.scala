@@ -55,13 +55,12 @@ class BatchingPropertySpec extends AnyFunSuite {
       batches.foreach { case (sql, cnt) =>
         assert(sql.startsWith(insertStmt))
         assert(sql.sliding(insertStmt.length).count(_ == insertStmt) == 1)
-        // bound holds unless a single tuple alone exceeds it. The flush
-        // check intentionally excludes the joining comma (reference
-        // table_migrator.rs:138-145 does the same; the 10 reserved
-        // bytes absorb it), so the hard invariant is bound + 1.
+        // bound holds unless a single tuple alone exceeds it; the
+        // joining comma counts before the flush test, so the reserve
+        // is never entered
         if (cnt > 1)
           assert(BatchedInsertWriter.ReservedBytes +
-            sql.getBytes("UTF-8").length <= maxBytes + 1,
+            sql.getBytes("UTF-8").length <= maxBytes,
             s"batch of $cnt rows is ${sql.length}B > bound $maxBytes")
         // value-tuple count matches the reported row count (+1 for the
         // column list in the INSERT prefix)

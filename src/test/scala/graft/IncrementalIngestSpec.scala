@@ -134,27 +134,32 @@ class IncrementalIngestSpec extends AnyFunSuite {
     assert(plain.nonEmpty && compacted == plain)
   }
 
-  test("ingestMany: nBatches=2 equals the two-arrival ingest verdict " +
-    "for verdict; a 5-batch chain is cadence-invariant") {
+  test("ingest: the default split is doc_id % 4 with one verdict per " +
+    "odd doc; a 5-batch chain is cadence-invariant") {
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.IncrementalIngest
     val dir = "/root/testdata/sf0.001"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).toSeq
-    val two = rows(graft.streaming.IncrementalIngest.ingest(
+    def ingest(nBatches: Int, compactEvery: Int) = IncrementalIngest.ingest(
       spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      compactEvery = 2))
-    val many2 = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 2, compactEvery = 2))
-    assert(many2.nonEmpty && many2 == two,
-      "((doc_id-1) div 2) mod 2 must equal the doc_id mod 4 split")
+      nBatches = nBatches, compactEvery = compactEvery).collect().toSeq
+    // the split the evs_incremental_ingest oracle is written against:
+    // batch 1 = doc_id % 4 == 1, batch 2 = doc_id % 4 == 3
+    val two = IncrementalIngest.ingest(spark, dir, threshold = 0.5,
+      shingleK = 3, maxShingleDf = 64, compactEvery = 2).collect().toSeq
+    val oddDocs = Tables(spark, dir, "documents")
+      .filter(col("doc_id") % 2 === 1).select(col("doc_id")).collect()
+      .map(_.getAs[Number](0).longValue).sorted.toSeq
+    assert(oddDocs.nonEmpty && two.map(_.getLong(0)) == oddDocs,
+      "every odd doc has exactly one verdict")
+    two.foreach { r =>
+      val (id, b) = (r.getLong(0), r.getInt(4))
+      assert((b == 1) == (id % 4 == 1) && (b == 2) == (id % 4 == 3),
+        s"doc $id arrived in batch $b")
+    }
     // five real micro-batches: compacting every 3 deltas must leave
     // every verdict identical to the never-compacted chain
-    val n5raw = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 5, compactEvery = 0))
-    val n5cad = rows(graft.streaming.IncrementalIngest.ingestMany(
-      spark, dir, threshold = 0.5, shingleK = 3, maxShingleDf = 64,
-      nBatches = 5, compactEvery = 3))
+    val n5raw = ingest(nBatches = 5, compactEvery = 0).map(_.toString)
+    val n5cad = ingest(nBatches = 5, compactEvery = 3).map(_.toString)
     assert(n5raw.nonEmpty && n5cad == n5raw)
     // the N-batch split changes WHICH verdicts arise (arrival order
     // matters by design), but every odd doc gets exactly one verdict

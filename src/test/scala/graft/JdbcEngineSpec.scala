@@ -222,4 +222,50 @@ class JdbcEngineSpec extends AnyFunSuite {
     assert(results.head.rowsMigrated == seeded("SUPPLIER"))
     assert(writer.rowCount("SUPPLIER") == seeded("SUPPLIER"))
   }
+
+  test("a failed auto-commit restore never hides the failed statement") {
+    // a target that drops the connection once a transaction fails:
+    // Derby behind a Proxy whose setAutoCommit(true) throws after a
+    // rollback, as a server that closed the socket would
+    val prefix = "jdbc:graft-dropping:"
+    val derby = DriverManager.getDriver(dstUrl)
+    val dropping = new java.sql.Driver {
+      def acceptsURL(url: String): Boolean = url.startsWith(prefix)
+      def connect(url: String, info: java.util.Properties): java.sql.Connection =
+        if (!acceptsURL(url)) null
+        else {
+          val c = derby.connect("jdbc:derby:" + url.stripPrefix(prefix), info)
+          var rolledBack = false
+          java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+            Array(classOf[java.sql.Connection]),
+            (_: Any, m: java.lang.reflect.Method, args: Array[AnyRef]) => {
+              if (m.getName == "setAutoCommit" && rolledBack &&
+                  args(0) == java.lang.Boolean.TRUE)
+                throw new java.sql.SQLNonTransientConnectionException(
+                  "No current connection.")
+              if (m.getName == "rollback") rolledBack = true
+              try m.invoke(c, args: _*)
+              catch { case e: java.lang.reflect.InvocationTargetException =>
+                throw e.getCause }
+            }).asInstanceOf[java.sql.Connection]
+        }
+      def getMajorVersion: Int = 1
+      def getMinorVersion: Int = 0
+      def jdbcCompliant: Boolean = false
+      def getPropertyInfo(url: String, info: java.util.Properties) =
+        Array.empty[java.sql.DriverPropertyInfo]
+      def getParentLogger: java.util.logging.Logger =
+        java.util.logging.Logger.getGlobal
+    }
+    DriverManager.registerDriver(dropping)
+    try {
+      val writer = new JdbcTargetWriter(
+        prefix + "memory:graft_jdbc_dropping;create=true", AnsiFlavor)
+      val bad = "CREATE TABLE BROKEN_T (A NOT_A_TYPE)"
+      val e = intercept[RuntimeException](writer.createTable(bad))
+      assert(e.getMessage.contains(bad), e.getMessage)
+      assert(e.getSuppressed.exists(
+        _.getMessage.contains("No current connection")))
+    } finally DriverManager.deregisterDriver(dropping)
+  }
 }
