@@ -70,7 +70,10 @@ object MigrateMain {
       val secs = (System.nanoTime() - t0) / 1e9
       val total = results.map(_.rowsMigrated).sum
       results.sortBy(_.tableName).foreach { r =>
-        println(f"  ${r.tableName}%-14s created=${r.created}%-5s rows=${r.rowsMigrated}")
+        // the reference's per-table line: rows, seconds, rows/s
+        println(f"  ${r.tableName}%-14s created=${r.created}%-5s " +
+          f"${r.rowsMigrated}%d rows in ${r.seconds}%.2f s " +
+          f"(${r.rowsMigrated / math.max(r.seconds, 1e-9)}%.0f rows/s)")
       }
       migrator.warnings.foreach(w => println(s"  WARN: $w"))
       println(f"Migrated ${results.size} tables, $total rows in $secs%.2f s " +

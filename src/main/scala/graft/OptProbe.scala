@@ -25,14 +25,14 @@ object OptProbe {
     private val jobStart =
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     private val stageJob =
-      new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+      new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     private val jobTasks =
       new java.util.concurrent.ConcurrentHashMap[Int,
         (java.util.concurrent.atomic.AtomicLong,
           java.util.concurrent.atomic.AtomicLong)]()
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
-      j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
+      j.stageIds.foreach(sid => stageJob.put(sid, Int.box(j.jobId)))
       jobTasks.put(j.jobId,
         (new java.util.concurrent.atomic.AtomicLong,
           new java.util.concurrent.atomic.AtomicLong))
@@ -59,13 +59,12 @@ object OptProbe {
       tasks.incrementAndGet()
       if (t.taskInfo != null) {
         taskMs.addAndGet(t.taskInfo.duration)
-        val j = stageJob.get(t.stageId)
-        val tk = if (j != null) jobTasks.get(j) else null
-        if (tk != null) {
-          tk._1.incrementAndGet()
-          tk._2.addAndGet(t.taskInfo.duration)
-          ()
-        }
+        // a stage with no recorded job is charged to no job
+        Option(stageJob.get(t.stageId)).flatMap(j => Option(jobTasks.get(j)))
+          .foreach { tk =>
+            tk._1.incrementAndGet()
+            tk._2.addAndGet(t.taskInfo.duration)
+          }
       }
     }
     def snap(): (Long, Long, Long, Long) =

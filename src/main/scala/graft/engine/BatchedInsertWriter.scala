@@ -1,6 +1,10 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.util.LongAccumulator
 
 /** Executor-side sink for rendered INSERT batches. One instance is
@@ -34,7 +38,11 @@ trait BatchSink extends Serializable {
   *
   * Scale: the loop is per-partition sequential (as any JDBC writer
   * is); throughput scales with partition count, and each partition
-  * buffers at most one packet.
+  * buffers at most one packet. Rows are read as Spark's `InternalRow`s
+  * and rendered by a [[TupleRenderer]] straight into that buffer as
+  * UTF-8 bytes, so a tuple's byte length is known without encoding it
+  * twice and no external `Row` or per-value `String` is built; the
+  * statement is decoded to a `String` once, when the batch flushes.
   */
 object BatchedInsertWriter {
 
@@ -49,47 +57,45 @@ object BatchedInsertWriter {
 
     val rows: LongAccumulator =
       df.sparkSession.sparkContext.longAccumulator("rows_migrated")
+    val schema = df.schema
+    val prefix = insertStatement.getBytes(UTF_8)
+    val qe = df.queryExecution
 
-    df.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      sink.open(pid)
-      try {
-        val prefixBytes = insertStatement.getBytes("UTF-8").length
-        val sb = new StringBuilder
-        var totalBytes = prefixBytes
-        var batchRows = 0
+    SQLExecution.withNewExecutionId(qe, Some("batched insert")) {
+      qe.toRdd.foreachPartition { it =>
+        sink.open(TaskContext.getPartitionId())
+        try {
+          // the statement so far: the prefix, then comma-joined tuples
+          val out = new TupleRenderer(schema, quotedDecimals)
+          out.append(prefix)
+          var batchRows = 0
 
-        def flush(): Unit = if (batchRows > 0) {
-          sink.execute(sb.toString, batchRows)
-          rows.add(batchRows.toLong)
-          sb.clear()
-          totalBytes = prefixBytes
-          batchRows = 0
-        }
+          def flush(end: Int): Unit = if (batchRows > 0) {
+            sink.execute(new String(out.bytes, 0, end, UTF_8), batchRows)
+            rows.add(batchRows.toLong)
+            batchRows = 0
+          }
 
-        while (it.hasNext) {
-          val row = it.next()
-          val tuple = SqlLiteral.valueTuple(row.toSeq, quotedDecimals)
-          val tupleBytes = tuple.getBytes("UTF-8").length
-
-          val commaBytes = if (batchRows > 0) 1 else 0
-          if (ReservedBytes + totalBytes + commaBytes + tupleBytes >
-              maxPacketBytes)
-            flush()
-          // A single tuple larger than the packet bound still ships as
-          // its own batch (flush above was a no-op at batchRows == 0) —
-          // reference parity: its loop does the same and lets the
-          // server reject it; the startup packet guard only validates
-          // the configured bound.
-
-          if (sb.nonEmpty) { sb.append(','); totalBytes += 1 }
-          if (batchRows == 0) sb.append(insertStatement)
-          sb.append(tuple)
-          totalBytes += tupleBytes
-          batchRows += 1
-        }
-        flush()
-      } finally sink.close()
+          while (it.hasNext) {
+            val mark = out.length
+            if (batchRows > 0) out.append(','.toByte)
+            out.appendTuple(it.next())
+            // the buffer now holds prefix + tuples + joining comma + the
+            // new tuple: exactly the bytes the bound is tested on
+            if (batchRows > 0 && ReservedBytes + out.length > maxPacketBytes) {
+              flush(mark)
+              out.moveTail(mark + 1, prefix.length)
+            }
+            // A single tuple larger than the packet bound still ships as
+            // its own batch (no flush at batchRows == 0) — reference
+            // parity: its loop does the same and lets the server reject
+            // it; the startup packet guard only validates the configured
+            // bound.
+            batchRows += 1
+          }
+          flush(out.length)
+        } finally sink.close()
+      }
     }
     rows.value
   }

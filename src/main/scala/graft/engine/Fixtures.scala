@@ -2,6 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,13 +16,30 @@ import graft.types.{ColumnSchema, Constraint, MssqlType}
   * are presented as the MSSQL types the reference would see in
   * INFORMATION_SCHEMA, with key/FK constraints reconstructed from the
   * star schema.
+  *
+  * Each table's DataFrame is built once per instance, so the schema
+  * probe and the scan share one parquet footer read.
   */
 final class ParquetFixtureSource(sfDir: String, spark: SparkSession)
     extends SchemaSource {
 
+  private val frames = TrieMap.empty[String, DataFrame]
+
+  private def path(table: String) = Paths.get(s"$sfDir/$table.parquet")
+
+  /** Bytes on disk: the file, or every file under a partitioned dir. */
+  private def sizeOnDisk(table: String): Long = {
+    val files = Files.walk(path(table))
+    try files.iterator().asScala.filter(Files.isRegularFile(_)).map(p => Files.size(p)).sum
+    finally files.close()
+  }
+
+  /** Largest first, so the longest table starts first; ties keep the
+    * fixture order.
+    */
   override def fetchTables(): Seq[String] =
-    Tables.names.filter(t =>
-      Files.exists(Paths.get(s"$sfDir/$t.parquet")))
+    Tables.names.filter(t => Files.exists(path(t)))
+      .map(t => t -> sizeOnDisk(t)).sortBy(-_._2).map(_._1)
 
   /** Primary/foreign keys of the TPC-H-ish star schema. */
   private val primaryKeys = Map(
@@ -72,7 +90,10 @@ final class ParquetFixtureSource(sfDir: String, spark: SparkSession)
     }
   }
 
-  override def read(spark: SparkSession, table: String): DataFrame = {
+  override def read(spark: SparkSession, table: String): DataFrame =
+    frames.getOrElseUpdate(table, load(spark, table))
+
+  private def load(spark: SparkSession, table: String): DataFrame = {
     val df = Tables(spark, sfDir, table)
     // array columns are rendered to text for the relational target
     df.schema.fields.foldLeft(df) { (acc, f) =>

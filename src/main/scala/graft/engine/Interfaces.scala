@@ -13,7 +13,11 @@ import graft.types.{ColumnSchema, TargetColumn}
   * driver parquet tables.
   */
 trait SchemaSource {
-  /** List base tables (S1, extractor.rs:25-49). */
+  /** List base tables (S1, extractor.rs:25-49). The listing order is
+    * the order [[Migrator]] submits the tables in: a source that knows
+    * table sizes lists the largest first, so the longest migration
+    * starts first (the reference fixes no order).
+    */
   def fetchTables(): Seq[String]
 
   /** Column metadata + constraints for one table (S2, extractor.rs:51-94). */
@@ -61,12 +65,15 @@ trait TargetWriter extends Serializable {
   def quotedDecimalLiterals: Boolean = true
 }
 
-/** Per-table outcome (migrate/migration_result.rs:3-9). */
+/** Per-table outcome (migrate/migration_result.rs:3-9), plus the
+  * table's wall seconds from schema probe to last batch.
+  */
 final case class MigrationResult(
     tableName: String,
     schema: Seq[TargetColumn],
     created: Boolean,
-    rowsMigrated: Long)
+    rowsMigrated: Long,
+    seconds: Double = 0.0)
 
 /** Orchestration options (migrate/migration_options.rs + src/args.rs). */
 final case class MigrationOptions(

@@ -144,6 +144,7 @@ final class Migrator(
 
   /** table_migrator.rs:43-114 — one table end to end. */
   private def migrateTable(table: String): MigrationResult = {
+    val t0 = System.nanoTime()
     val out = outputName(table)
     val sourceSchema = source.getTableSchema(table)
     val mapped = TableSchemaMapper.mapSchema(
@@ -165,7 +166,8 @@ final class Migrator(
       new TargetBatchSink(writer),
       writer.quotedDecimalLiterals)
 
-    MigrationResult(out, mapped, created = !exists, rowsMigrated = rows)
+    MigrationResult(out, mapped, created = !exists, rowsMigrated = rows,
+      seconds = (System.nanoTime() - t0) / 1e9)
   }
 
   /** constraints_creator.rs:18-47 — created tables only, best-effort. */

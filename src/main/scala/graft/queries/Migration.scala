@@ -1920,7 +1920,15 @@ object Migration {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val sbF = Future { buckets(sh).localCheckpoint() }
-    val tb = buckets(th).localCheckpoint()
+    val tb =
+      try buckets(th).localCheckpoint()
+      catch {
+        case e: Throwable =>
+          // drain the source side before the primary failure propagates
+          try { Await.ready(sbF, Duration.Inf); () }
+          catch { case _: Throwable => () }
+          throw e
+      }
     val sb = Await.result(sbF, Duration.Inf)
     val dirty = sb.as("sb")
       .join(tb.as("tb"), Seq("bkt"), "full_outer")

@@ -21,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
 case class DataDiffRow(k: Long, ck: Long, st: String, price: Double,
     ts: Timestamp, pri: String)
 
+/** Source-side rows hashed so far, counted inside the Spark tasks. */
+object DataDiffSlowSide { val rowsSeen = new java.util.concurrent.atomic.AtomicInteger }
+
 class DataDiffSpec extends AnyFunSuite {
   private type R = DataDiffRow
   private val R = DataDiffRow
@@ -124,5 +127,22 @@ class DataDiffSpec extends AnyFunSuite {
     val got = run(src, src ++ extras)
     assert(got("extra_in_target")._1 == 5L, got)
     assert(got("identical")._1 == 100L, got)
+  }
+
+  test("a failed target checkpoint surfaces only after the source side has finished") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val rows = (1L to 40L).map(k =>
+      R(k, k, "O", 1.0, new Timestamp(0L), "1-URGENT"))
+    val slow = udf { (k: Long) =>
+      Thread.sleep(50); DataDiffSlowSide.rowsSeen.incrementAndGet(); k
+    }
+    val boom = udf { (k: Long) =>
+      if (k > 0) throw new IllegalStateException("target unreadable"); k
+    }
+    DataDiffSlowSide.rowsSeen.set(0)
+    intercept[Exception](queries.Migration.dataDiffClassify(
+      toDf(rows).withColumn("o_custkey", slow(col("o_custkey"))),
+      toDf(rows).withColumn("o_custkey", boom(col("o_custkey")))))
+    assert(DataDiffSlowSide.rowsSeen.get() >= rows.size)
   }
 }

@@ -222,6 +222,7 @@ class EngineSpec extends AnyFunSuite {
         maxConcurrentTasks = 4))
     val results = m.run()
     assert(results.size == 10)
+    assert(results.forall(_.seconds > 0))
     val byName = results.map(r => r.tableName -> r.rowsMigrated).toMap
     assert(byName("region") == 5L)
     assert(byName("lineitem") > 5000L)
@@ -232,5 +233,17 @@ class EngineSpec extends AnyFunSuite {
     val m2 = new Migrator(spark, src, w, TypeRegistry.withDefaults(),
       MigrationOptions(formatSnakeCase = true))
     intercept[MigrationException.TaskPanicked](m2.run())
+  }
+
+  test("fixture source: largest table first, one DataFrame per table") {
+    val dir = "/root/testdata/sf0.001"
+    val src = new ParquetFixtureSource(dir, spark)
+    val listed = src.fetchTables()
+    assert(listed.toSet == graft.Tables.names.toSet)
+    val sizes = listed.map(t =>
+      Files.size(java.nio.file.Paths.get(s"$dir/$t.parquet")))
+    assert(sizes == sizes.sorted.reverse)
+    // the schema probe and the scan share one DataFrame
+    assert(src.read(spark, "region") eq src.read(spark, "region"))
   }
 }
