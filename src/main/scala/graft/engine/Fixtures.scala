@@ -17,13 +17,14 @@ import graft.types.{ColumnSchema, Constraint, MssqlType}
   * INFORMATION_SCHEMA, with key/FK constraints reconstructed from the
   * star schema.
   *
-  * Each table's DataFrame is built once per instance, so the schema
-  * probe and the scan share one parquet footer read.
+  * Each table's DataFrame is built once per instance and session, so
+  * the schema probe and a scan in the constructor's session share one
+  * parquet footer read; a scan in another session gets its own frame.
   */
 final class ParquetFixtureSource(sfDir: String, spark: SparkSession)
     extends SchemaSource {
 
-  private val frames = TrieMap.empty[String, DataFrame]
+  private val frames = TrieMap.empty[(SparkSession, String), DataFrame]
 
   private def path(table: String) = Paths.get(s"$sfDir/$table.parquet")
 
@@ -91,7 +92,7 @@ final class ParquetFixtureSource(sfDir: String, spark: SparkSession)
   }
 
   override def read(spark: SparkSession, table: String): DataFrame =
-    frames.getOrElseUpdate(table, load(spark, table))
+    frames.getOrElseUpdate((spark, table), load(spark, table))
 
   private def load(spark: SparkSession, table: String): DataFrame = {
     val df = Tables(spark, sfDir, table)

@@ -18,16 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - strings copy their UTF-8 bytes, doubling `'` and `\` (both ASCII,
   *    so never inside a multibyte sequence); malformed UTF-8 goes
   *    through the same decode as `UTF8String.toString`;
-  *  - integers, compact decimals, and dates and timestamps inside
-  *    1900..9999 are written as digits, with the 3/6-digit fraction
-  *    trimming of `SqlLiteral`. Timestamps take the JVM default zone's
-  *    wall clock, as `java.sql.Timestamp.toLocalDateTime` does; the zone
-  *    is read once, when the renderer is built;
-  *  - floats and doubles keep `java.lang.Float/Double.toString`;
-  *  - any other type, and dates and timestamps outside that window
-  *    (where the hybrid Julian calendar and pre-1900 zone offsets of
-  *    `java.sql` come into play), are converted to their external value
-  *    and rendered by `SqlLiteral.render`.
+  *  - ints, longs, and timestamps inside 1900..9999 are written as
+  *    digits, with the 3/6-digit fraction trimming of `SqlLiteral`.
+  *    Timestamps take the JVM default zone's wall clock, as
+  *    `java.sql.Timestamp.toLocalDateTime` does; the zone is read once,
+  *    when the renderer is built;
+  *  - doubles keep `java.lang.Double.toString`;
+  *  - any other type, and timestamps outside that window (where the
+  *    hybrid Julian calendar and pre-1900 zone offsets of `java.sql`
+  *    come into play), are converted to their external value and
+  *    rendered by `SqlLiteral.render`.
   *
   * One renderer serves one partition task; it is not thread-safe.
   */
@@ -137,30 +137,7 @@ private[graft] final class TupleRenderer(schema: StructType,
     }
   }
 
-  private def putHex(bs: Array[Byte]): Unit = {
-    ensure(2 + 2 * bs.length)
-    buf(pos) = '0'.toByte; buf(pos + 1) = 'x'.toByte; pos += 2
-    var i = 0
-    while (i < bs.length) {
-      buf(pos) = HexDigits((bs(i) >> 4) & 0xf)
-      buf(pos + 1) = HexDigits(bs(i) & 0xf)
-      pos += 2
-      i += 1
-    }
-  }
-
-  /** `BigDecimal.valueOf(unscaled, scale).toPlainString` for scale >= 0. */
-  private def putUnscaled(unscaled: Long, scale: Int): Unit =
-    if (scale == 0) putLong(unscaled)
-    else {
-      if (unscaled < 0) append('-'.toByte)
-      val a = math.abs(unscaled)
-      putLong(a / Pow10(scale))
-      append('.'.toByte)
-      putPadded(a % Pow10(scale), scale)
-    }
-
-  /** `yyyy-MM-dd` of an epoch day inside the fast-path window. */
+  /** `yyyy-MM-dd` of an epoch day inside 1900..9999. */
   private def putDate(epochDay: Long): Unit = {
     // days-to-civil (H. Hinnant), all terms non-negative in the window
     val z = epochDay + 719468
@@ -213,54 +190,18 @@ private[graft] final class TupleRenderer(schema: StructType,
       Math.floorDiv(utcMicros, MicrosPerSecond))).getTotalSeconds * MicrosPerSecond
 
   private def writerFor(dt: DataType): Writer = dt match {
-    case BooleanType => new Writer {
-      def write(row: InternalRow, i: Int): Unit =
-        append((if (row.getBoolean(i)) '1' else '0').toByte)
-    }
-    case ByteType => new Writer {
-      def write(row: InternalRow, i: Int): Unit = putLong(row.getByte(i).toLong)
-    }
-    case ShortType => new Writer {
-      def write(row: InternalRow, i: Int): Unit = putLong(row.getShort(i).toLong)
-    }
     case IntegerType => new Writer {
       def write(row: InternalRow, i: Int): Unit = putLong(row.getInt(i).toLong)
     }
     case LongType => new Writer {
       def write(row: InternalRow, i: Int): Unit = putLong(row.getLong(i))
     }
-    case FloatType => new Writer {
-      def write(row: InternalRow, i: Int): Unit =
-        putAscii(java.lang.Float.toString(row.getFloat(i)))
-    }
     case DoubleType => new Writer {
       def write(row: InternalRow, i: Int): Unit =
         putAscii(java.lang.Double.toString(row.getDouble(i)))
     }
-    case d: DecimalType if d.scale >= 0 => new Writer {
-      private val compact = d.precision <= Decimal.MAX_LONG_DIGITS
-      def write(row: InternalRow, i: Int): Unit = {
-        val v = row.getDecimal(i, d.precision, d.scale)
-        if (quotedDecimals) putQuote()
-        if (compact) putUnscaled(v.toUnscaledLong, d.scale)
-        else putAscii(v.toJavaBigDecimal.toPlainString)
-        if (quotedDecimals) putQuote()
-      }
-    }
     case _: StringType => new Writer {
       def write(row: InternalRow, i: Int): Unit = putString(row.getUTF8String(i))
-    }
-    case BinaryType => new Writer {
-      def write(row: InternalRow, i: Int): Unit = putHex(row.getBinary(i))
-    }
-    case DateType => new Writer {
-      private val slow = new Fallback(dt)
-      def write(row: InternalRow, i: Int): Unit = {
-        val days = row.getInt(i)
-        if (days >= MinFastDay && days <= MaxFastDay) {
-          putQuote(); putDate(days.toLong); putQuote()
-        } else slow.write(row, i)
-      }
     }
     case TimestampType => new Writer {
       private val slow = new Fallback(dt)
@@ -296,5 +237,4 @@ private object TupleRenderer {
   private val MinFastDay = java.time.LocalDate.of(1900, 1, 1).toEpochDay.toInt
   private val MaxFastDay = java.time.LocalDate.of(9999, 12, 31).toEpochDay.toInt
   private val Pow10: Array[Long] = Array.iterate(1L, 19)(_ * 10)
-  private val HexDigits: Array[Byte] = "0123456789abcdef".getBytes(UTF_8)
 }

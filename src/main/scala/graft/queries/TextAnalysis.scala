@@ -417,8 +417,11 @@ object TextAnalysis {
       dir: String): graft.text.BpeModel =
     bpeModelMemo.getOrElseUpdate(
       graft.StagedFixture.key(s"bpe_model_$BpeTrainMerges", dir),
-      graft.text.BpeModel.train(Tables(s, dir, "documents"), "text",
-        graft.text.BpeTrainConfig(BpeTrainMerges)))
+      trainModel(s, dir))
+
+  private def trainModel(s: SparkSession, dir: String): graft.text.BpeModel =
+    graft.text.BpeModel.train(Tables(s, dir, "documents"), "text",
+      graft.text.BpeTrainConfig(BpeTrainMerges))
 
   // the training loop lives in graft.text.BpeModel (the persistable
   // artifact); ranks <= 31 keep the chr(rank) sentinel the unrolled
@@ -429,9 +432,7 @@ object TextAnalysis {
 
   /** ta_bpe_train times the training itself, so it bypasses the memo. */
   private def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val model = graft.text.BpeModel.train(Tables(s, dir, "documents"), "text",
-      graft.text.BpeTrainConfig(BpeTrainMerges))
-    val rows = learnedMerges(model).map(m =>
+    val rows = learnedMerges(trainModel(s, dir)).map(m =>
       (m.rank, m.lhs, m.rhs, m.lhs + m.rhs, m.count))
     s.createDataFrame(rows)
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")

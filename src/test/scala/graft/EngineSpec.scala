@@ -245,5 +245,9 @@ class EngineSpec extends AnyFunSuite {
     assert(sizes == sizes.sorted.reverse)
     // the schema probe and the scan share one DataFrame
     assert(src.read(spark, "region") eq src.read(spark, "region"))
+    // a scan in another session is built in that session
+    val other = spark.newSession()
+    assert(src.read(other, "region").sparkSession eq other)
+    assert(src.read(spark, "region").sparkSession eq spark)
   }
 }
